@@ -61,12 +61,14 @@ object CacheScope {
     * local blocks, no write amplification. `spark.graft.checkpoint.
     * reliable=true|false` overrides the auto-dispatch either way.
     *
-    * Unlike `cached`, the blocks behind a checkpointed frame are NOT
-    * in the SQL cache (clearCache() cannot see them) and are
-    * otherwise freed only when GC + ContextCleaner get to the RDD —
-    * registering the underlying RDD here releases them at drain, so
-    * one query's cut frames cannot pressure the next query's memory
-    * (r16 advice). */
+    * Unlike `cached`, what backs a cut frame is NOT in the SQL cache
+    * (clearCache() cannot see it), so drain releases it: a local cut's
+    * blocks are unpersisted (otherwise they would wait for GC +
+    * ContextCleaner), and a reliable cut's checkpoint files are
+    * deleted — unpersisting a reliably checkpointed RDD frees nothing,
+    * and ContextCleaner keeps checkpoint files by default. One query's
+    * cut frames thus cannot pressure the next query's memory or
+    * disk. */
   def cut(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val reliable =
@@ -79,7 +81,13 @@ object CacheScope {
     out.queryExecution.logical match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         val rdd = l.rdd
-        live.get.add(() => rdd.unpersist(blocking = false))
+        val hadoopConf = sc.hadoopConfiguration
+        live.get.add(() => rdd.getCheckpointFile match {
+          case Some(f) =>
+            val p = new org.apache.hadoop.fs.Path(f)
+            p.getFileSystem(hadoopConf).delete(p, true); ()
+          case None => rdd.unpersist(blocking = false); ()
+        })
       case _ => // not a materialized scan (unexpected); nothing to free
     }
     out

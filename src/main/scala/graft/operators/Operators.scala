@@ -403,11 +403,12 @@ object Operators {
     * would have paid for anyway — is collected ONCE and labeled by
     * union-find with union-by-min-root, which yields exactly the
     * fixpoint the propagation loop converges to (comp = minimum
-    * vertex id in the component; Long ids only — any other id type
-    * takes the distributed path). Every near-dup cluster graph is
-    * pairs-of-duplicates sized (≪ corpus); at warehouse scale the
-    * graph blows the gate and the distributed loop below runs
-    * untouched. OperatorsSpec pins driver == distributed. */
+    * vertex id in the component; non-null Long ids only — any other
+    * id type, or a null id, takes the distributed path). Every
+    * near-dup cluster graph is pairs-of-duplicates sized (≪ corpus);
+    * at warehouse scale the graph blows the gate and the distributed
+    * loop below runs untouched. OperatorsSpec pins driver ==
+    * distributed. */
   private[graft] val ccDriverGateRows = 8L * 1024 * 1024
 
   def connectedComponents(edges: DataFrame, src: String, dst: String): DataFrame = {
@@ -416,7 +417,13 @@ object Operators {
       .toDF("src", "dst").cache()
     val longIds = und.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
-    if (longIds && und.count() <= ccDriverGateRows) {
+    // the null probe rides the same job as the gate count
+    def smallAndNonNull = {
+      val r = und.agg(count(lit(1)),
+        count(when(col("src").isNull || col("dst").isNull, 1))).head()
+      r.getLong(0) <= ccDriverGateRows && r.getLong(1) == 0
+    }
+    if (longIds && smallAndNonNull) {
       val labeled = ccUnionFind(
         und.collect().map(r => (r.getLong(0), r.getLong(1))))
       und.unpersist()

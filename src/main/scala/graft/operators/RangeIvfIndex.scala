@@ -42,6 +42,21 @@ object RangeIvfIndex {
     (s.read.parquet(s"$path/assigned"),
      s.read.parquet(s"$path/cells"))
 
+  /** The persisted cluster ids and their centroids, in the same
+    * cluster-id order: the bounded k ≈ √n driver matrix the native
+    * NearestClusters expression takes. */
+  private def centroids(s: SparkSession, path: String): (Array[Int], Array[Array[Double]]) = {
+    val cells = s.read.parquet(s"$path/cells").select(col("cluster"), col("cv"))
+      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    (cells.map(_._1), cells.map(_._2))
+  }
+
+  /** NearestClusters ranks the POSITION in the centroid array; map a
+    * 0-based `slot` to the persisted cluster id. `cells/` stores
+    * non-empty cells only, so ids need not be contiguous. */
+  private def clusterId(ids: Array[Int], slot: org.apache.spark.sql.Column) =
+    element_at(array(ids.map(lit): _*), slot + 1)
+
   /** Append a delta batch of (vec_id, embedding) vectors to a
     * persisted index WITHOUT a refit — the maintenance operation an
     * arriving-data deployment runs per batch (s12's claim, on disk):
@@ -60,18 +75,11 @@ object RangeIvfIndex {
     * admission bound only requires each member to be counted in its
     * assigned cell's radius, which the merge guarantees. */
   def append(s: SparkSession, path: String, delta: DataFrame): Unit = {
-    val cells = s.read.parquet(s"$path/cells")
-      .orderBy(col("cluster")).collect()
-    val ids = cells.map(_.getInt(0))
-    val cents = cells.map(_.getSeq[Double](1).toArray)
-    val idLookup = org.apache.spark.sql.functions.array(ids.map(lit): _*)
+    val (ids, cents) = centroids(s, path)
     val assignedDelta = delta
       .withColumn("slot", element_at(
         graft.functions.GraftColumns.nearestClusters(col("embedding"), cents, 1), 1))
-      // NearestClusters ranks the POSITION in the centroid array;
-      // remap to the persisted cluster ids (cells stores non-empty
-      // cells only, so ids need not be contiguous)
-      .withColumn("cluster", element_at(idLookup, col("slot") + 1))
+      .withColumn("cluster", clusterId(ids, col("slot")))
       .select(col("vec_id").as("cand_id"), col("embedding"), col("cluster"))
     assignedDelta.write.mode("append").partitionBy("cluster")
       .parquet(s"$path/assigned")
@@ -178,16 +186,13 @@ object RangeIvfIndex {
     * (spec-pinned both ways). */
   def probeNearest(s: SparkSession, path: String, queries: DataFrame,
                    k: Int, nProbe: Int): DataFrame = {
-    val (cands, cells) = read(s, path)
-    val cents = cells.select(col("cluster"), col("cv")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1)))
-      .sortBy(_._1).map(_._2.toArray)
+    val (ids, cents) = centroids(s, path)
     val probes = queries.select(col("q_id"), col("q_vec"))
-      .withColumn("cluster", explode(
+      .withColumn("slot", explode(
         graft.functions.GraftColumns.nearestClusters(col("q_vec"), cents, nProbe)))
-      .select(col("q_id"), col("q_vec"), col("cluster"))
+      .select(col("q_id"), col("q_vec"), clusterId(ids, col("slot")).as("cluster"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id"))
-    live(s, path, cands).join(broadcast(probes), "cluster")
+    live(s, path, s.read.parquet(s"$path/assigned")).join(broadcast(probes), "cluster")
       .withColumn("cos",
         graft.functions.VectorFunctions.cosine(col("q_vec"), col("embedding")))
       .withColumn("rn", row_number().over(w))

@@ -412,34 +412,6 @@ object Ingest {
       .sortBy(bucketCol)
       .saveAsTable(table)
 
-  /** Expire old snapshots of a LEGACY single-directory-pointer mart
-    * (plain `v_<n>` dirs + a `_LATEST` file naming one of them — the
-    * layout [[compact]]-style maintenance produces): keep the `keep`
-    * highest-numbered versions plus whatever `_LATEST` names, delete
-    * the rest, and return the deleted names. The pointer's target is
-    * never deleted even outside the keep window (a reader may hold
-    * it). The bucket-manifest marts the continuous migrates write are
-    * expired by [[graft.streaming.StreamingJobs.expireMartSnapshots]]
-    * instead, which understands manifest references.
-    */
-  def expireSnapshots(spark: SparkSession, martRoot: String,
-                      keep: Int): Seq[String] = {
-    require(keep >= 1, "must keep at least one snapshot")
-    val root = new org.apache.hadoop.fs.Path(martRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val live = graft.streaming.StreamingJobs.readLatestName(spark, martRoot)
-    val versions = fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.matches("v_\\d+"))
-      .sortBy(n => -n.drop(2).toLong)
-    val doomed = versions.drop(keep).filterNot(live.contains)
-    doomed.foreach(n =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
-    doomed
-  }
-
   /** Raw-import archive: every payload that enters the system is
     * archived verbatim BEFORE parsing (reference
     * /root/reference/docs/Architecture.md "Overview": "S3 … used to
@@ -485,9 +457,10 @@ object Ingest {
     * standard mart maintenance every table format schedules.
     *
     * The rewrite goes to a NEW snapshot directory (the caller swaps a
-    * pointer or path atomically — migrateStream's `v_N`/`_LATEST`
-    * commit model): Spark refuses to overwrite a path it is reading,
-    * and a crashed compaction must leave the live data untouched.
+    * pointer or path atomically, as the mart manifest publish in
+    * [[graft.streaming.StreamingJobs]] does): Spark refuses to
+    * overwrite a path it is reading, and a crashed compaction must
+    * leave the live data untouched.
     * `coalesce` (not `repartition`) merges files without a shuffle —
     * compaction moves every byte once through the writers and nothing
     * through an exchange.

@@ -928,18 +928,17 @@ object StreamingJobs {
   def bucketExpr(keys: Seq[String], nBuckets: Int): org.apache.spark.sql.Column =
     pmod(hash(keys.map(col): _*), lit(nBuckets))
 
-  /** The mart manifest `_LATEST` points at: the last applied snapshot
-    * (replay guard), the bucket scheme it was written with, and, per
-    * bucket, the snapshot directory currently holding that bucket's
-    * rows. Untouched buckets keep pointing at the snapshot that last
-    * wrote them — their files are never rewritten, which is what makes
-    * the per-batch publish O(delta). The scheme is recorded because an
-    * incremental merge is only valid against the SAME bucketing: a
-    * mart written with different nBuckets (or the legacy single-dir
-    * layout, scheme None) must be fully re-bucketed on first touch, or
-    * old rows for merged keys would stay reachable beside their
-    * replacements. */
-  case class MartManifest(applied: String, scheme: Option[Int],
+  /** The newest mart manifest (`_LATEST.<n>`): the last applied
+    * snapshot (replay guard), the bucket scheme it was written with,
+    * and, per bucket, the snapshot directory currently holding that
+    * bucket's rows. Untouched buckets keep pointing at the snapshot
+    * that last wrote them — their files are never rewritten, which is
+    * what makes the per-batch publish O(delta). The scheme is recorded
+    * because an incremental merge is only valid against the SAME
+    * bucketing: a mart written with different nBuckets must be fully
+    * re-bucketed on first touch, or old rows for merged keys would stay
+    * reachable beside their replacements. */
+  case class MartManifest(applied: String, scheme: Int,
                           buckets: Map[Int, String])
 
   /** Streaming migrate: keeps a latest-state mart continuously up to
@@ -962,53 +961,66 @@ object StreamingJobs {
                     keys: Seq[String], versionCol: String, tieBreakCol: String,
                     checkpoint: String, nBuckets: Int = 16,
                     expireEvery: Int = 0, expireKeep: Int = 2,
-                    retainVersions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    val tag = ensureRunTag(updates.sparkSession, checkpoint)
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val applied = applyMigrateBatch(batch.toDF(), batchId, tag, martRoot,
-          keys, versionCol, tieBreakCol, nBuckets, retainVersions)
-        if (applied && expireEvery > 0 && batchId % expireEvery == 0)
-          expireMartSnapshots(batch.sparkSession, martRoot, expireKeep)
-        ()
-      }
-      .start()
+                    retainVersions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
+    martStream(updates, martRoot, checkpoint, expireEvery, expireKeep) {
+      (batch, batchId, tag) => applyMigrateBatch(batch, batchId, tag, martRoot,
+        keys, versionCol, tieBreakCol, nBuckets, retainVersions)
+    }
+
+  /** Apply one change batch to the latest-state mart: the delta merges
+    * latest-wins (with tombstones) into the current rows of the buckets
+    * it touches, committed by [[commitBatch]]. The published mart
+    * carries only survivors (the deleted column is dropped at merge
+    * time), so every current row re-enters the merge with
+    * `deleted = false`. Returns false (and does nothing) when this
+    * exact (runTag, batchId) is already applied. */
+  def applyMigrateBatch(batch: DataFrame, batchId: Long, tag: String,
+                        martRoot: String, keys: Seq[String],
+                        versionCol: String, tieBreakCol: String,
+                        nBuckets: Int = 16, retainVersions: Int = 2): Boolean = {
+    val ordering = Seq(col(versionCol).desc, col(tieBreakCol).desc)
+    commitBatch(batch, batchId, tag, martRoot, keys, nBuckets, retainVersions) {
+      (current, delta) => graft.operators.Operators.migrateWithDeletes(
+        current.fold(delta.limit(0))(_.withColumn("deleted", lit(false))),
+        delta, keys.map(col), ordering)
+    }
   }
 
-  /** Apply one change batch to the mart, incrementally: merge the
-    * delta into ONLY the hash buckets it touches, write those buckets
-    * to a fresh snapshot directory `v_<runTag>_<batchId>` (one
-    * partitioned write), and atomically swap the `_LATEST` manifest so
-    * touched buckets point at the new snapshot while untouched buckets
-    * keep their existing directories byte-for-byte. Returns false (and
-    * does nothing) when the manifest already records this exact
-    * (runTag, batchId) as applied — the crash window between publish
-    * and the streaming checkpoint commit replays the batch, and
-    * re-merging would double-apply it. A replayed batch id from a
-    * DIFFERENT checkpoint (batch ids restart at 0 under a fresh one)
-    * has a different runTag, so it merges as the new data it is.
+  /** The one mart commit path: merge `delta` (already in mart shape)
+    * into ONLY the hash buckets it touches, write those buckets to a
+    * fresh snapshot directory `v_<runTag>_<batchId>` (one partitioned
+    * write), and atomically publish the next manifest so touched
+    * buckets point at the new snapshot while untouched buckets keep
+    * their existing directories byte-for-byte. Returns false (and does nothing) when
+    * the manifest already records this exact (runTag, batchId) as
+    * applied — the crash window between publish and the streaming
+    * checkpoint commit replays the batch, and re-merging would
+    * double-apply it. A replayed batch id from a DIFFERENT checkpoint
+    * (batch ids restart at 0 under a fresh one) has a different
+    * runTag, so it merges as the new data it is.
+    *
+    * `merge` combines the touched buckets' current rows (None when
+    * the mart holds none) with the delta.
     *
     * Crash safety: a crash before the manifest swap leaves the live
     * manifest untouched (the half-written snapshot dir is orphaned and
     * later expired); the replay rebuilds it from the previous
     * manifest's directories — never from the directory being written. */
-  def applyMigrateBatch(batch: DataFrame, batchId: Long, tag: String,
-                        martRoot: String, keys: Seq[String],
-                        versionCol: String, tieBreakCol: String,
-                        nBuckets: Int = 16, retainVersions: Int = 2): Boolean = {
-    val sp = batch.sparkSession
+  private def commitBatch(delta: DataFrame, batchId: Long, tag: String,
+                          martRoot: String, keys: Seq[String],
+                          nBuckets: Int, retainVersions: Int)(
+                          merge: (Option[DataFrame], DataFrame) => DataFrame): Boolean = {
+    val sp = delta.sparkSession
     val snap = snapshotName(tag, batchId)
     val manifest = readManifest(sp, martRoot)
     if (manifest.exists(_.applied == snap)) false
     else {
-      // a mart written under a DIFFERENT bucket scheme (changed
-      // nBuckets, or the legacy single-dir layout) cannot be merged
+      // a mart written under a DIFFERENT nBuckets cannot be merged
       // incrementally — rows for the delta's keys live in directories
       // the new scheme cannot address. First touch re-buckets the
       // whole mart once; every later batch is incremental again.
-      val rebucket = manifest.exists(!_.scheme.contains(nBuckets))
-      val delta = batch.persist() // read twice: touched-bucket probe + merge
+      val rebucket = manifest.exists(_.scheme != nBuckets)
+      delta.persist() // read twice: touched-bucket probe + merge
       try {
         // ≤ nBuckets values — bounded by configuration, not data
         val touched =
@@ -1020,22 +1032,33 @@ object StreamingJobs {
           (if (rebucket) bucketMap.values.toSeq
            else touched.toSeq.sorted.flatMap(bucketMap.get))
             .distinct.map(d => s"$martRoot/$d")
-        val ordering = Seq(col(versionCol).desc, col(tieBreakCol).desc)
-        // the published mart carries only survivors (the deleted column
-        // is dropped at merge time) — every mart row is alive, so it
-        // re-enters the merge with deleted = false
-        val current =
-          if (curPaths.isEmpty) delta.limit(0)
-          else sp.read.parquet(curPaths: _*).withColumn("deleted", lit(false))
-        val merged = graft.operators.Operators.migrateWithDeletes(
-          current, delta, keys.map(col), ordering)
-        merged.withColumn("_b", bucketExpr(keys, nBuckets))
+        val current = if (curPaths.isEmpty) None else Some(sp.read.parquet(curPaths: _*))
+        merge(current, delta).withColumn("_b", bucketExpr(keys, nBuckets))
           .write.partitionBy("_b").mode("overwrite").parquet(s"$martRoot/$snap")
         publishManifest(sp, martRoot, snap, touched,
           if (rebucket) Map.empty else bucketMap, nBuckets, retainVersions)
         true
       } finally { delta.unpersist(); () }
     }
+  }
+
+  /** The `foreachBatch` driver both continuous migrates share: one run
+    * tag per checkpoint lineage, `apply` per micro-batch, and the
+    * [[expireMartSnapshots]] hook every `expireEvery` applied batches. */
+  private def martStream(updates: DataFrame, martRoot: String, checkpoint: String,
+                         expireEvery: Int, expireKeep: Int)(
+                         apply: (DataFrame, Long, String) => Boolean)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val tag = ensureRunTag(updates.sparkSession, checkpoint)
+    updates.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        val applied = apply(batch.toDF(), batchId, tag)
+        if (applied && expireEvery > 0 && batchId % expireEvery == 0)
+          expireMartSnapshots(batch.sparkSession, martRoot, expireKeep)
+        ()
+      }
+      .start()
   }
 
   /** Tenant-scoped mart root for a continuous migrate: the tenant is
@@ -1059,7 +1082,7 @@ object StreamingJobs {
     s"$martRoot/$tenantCol=$tenant"
   }
 
-  /** Read the current mart state via the `_LATEST` manifest (all live
+  /** Read the current mart state via the newest manifest (all live
     * bucket directories as one frame). */
   def readMartLatest(spark: SparkSession, martRoot: String): Option[DataFrame] =
     readManifest(spark, martRoot).flatMap(martFrame(spark, martRoot, _))
@@ -1095,36 +1118,28 @@ object StreamingJobs {
     if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
   }
 
-  /** The last applied snapshot name the manifest records, if any. */
-  def readLatestName(spark: SparkSession, martRoot: String): Option[String] =
-    readManifest(spark, martRoot).map(_.applied)
-
-  /** Manifest files present at the mart root, newest version first.
-    * Versioned form is `_LATEST.<n>` (monotonic n); the bare legacy
-    * `_LATEST` reads as version 0 so marts written before versioning
-    * keep resolving. `_LATEST.tmp` never matches (non-digit suffix),
-    * and a suffix that doesn't fit in a Long (a crafted/corrupt name
-    * like `_LATEST.99999999999999999999`) is ignored like any other
-    * non-manifest file rather than throwing on the parse. */
+  /** Manifest files present at the mart root, newest version first:
+    * `_LATEST.<n>` with monotonic n. `_LATEST.tmp` never matches
+    * (non-digit suffix), and a suffix that doesn't fit in a Long (a
+    * crafted/corrupt name like `_LATEST.99999999999999999999`) is
+    * ignored like any other non-manifest file rather than throwing on
+    * the parse. */
   private def manifestVersions(fs: org.apache.hadoop.fs.FileSystem,
                                rootP: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
     if (!fs.exists(rootP)) Nil
     else fs.listStatus(rootP).toSeq.map(_.getPath).flatMap { p =>
       val n = p.getName
-      if (n == "_LATEST") Some(0L -> p)
-      else if (n.startsWith("_LATEST.") && n.length > 8 && n.drop(8).forall(_.isDigit))
+      if (n.startsWith("_LATEST.") && n.length > 8 && n.drop(8).forall(_.isDigit))
         scala.util.Try(n.drop(8).toLong).toOption.map(_ -> p)
       else None
     }.sortBy(-_._1)
 
-  /** Parse the newest resolvable manifest. Two content formats: the
-    * bucket manifest (`applied=<snap>`, `nbuckets=<n>`, then
-    * `<bucket>=<dir>` lines), and the legacy single-directory pointer
-    * (one bare name) which reads as a one-bucket manifest with no
-    * scheme. Manifests are published as whole-file atomic renames to a
-    * fresh `_LATEST.<n>` name, so the newest version is always a
-    * complete write; older versions are only consulted if the newest
-    * somehow fails to parse (defense in depth, not an expected state). */
+  /** Parse the newest resolvable manifest: `applied=<snap>`,
+    * `nbuckets=<n>`, then `<bucket>=<dir>` lines. Manifests are
+    * published as whole-file atomic renames to a fresh `_LATEST.<n>`
+    * name, so the newest version is always a complete write; older
+    * versions are only consulted if the newest somehow fails to parse
+    * (defense in depth, not an expected state). */
   def readManifest(spark: SparkSession, martRoot: String): Option[MartManifest] = {
     val fs = fileSystem(spark, martRoot)
     val rootP = new org.apache.hadoop.fs.Path(martRoot)
@@ -1155,16 +1170,17 @@ object StreamingJobs {
 
   private def parseManifest(content: String): Option[MartManifest] = {
     val lines = content.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    if (lines.isEmpty) None
-    else if (lines.head.startsWith("applied=")) {
-      val scheme = lines.find(_.startsWith("nbuckets="))
-        .map(_.stripPrefix("nbuckets=").toInt)
+    for {
+      applied <- lines.headOption.filter(_.startsWith("applied="))
+      scheme <- lines.find(_.startsWith("nbuckets="))
+        .flatMap(_.stripPrefix("nbuckets=").toIntOption)
+    } yield {
       val buckets = lines.tail.filterNot(_.startsWith("nbuckets=")).map { l =>
         val Array(b, d) = l.split("=", 2)
         b.toInt -> d
       }.toMap
-      Some(MartManifest(lines.head.stripPrefix("applied="), scheme, buckets))
-    } else Some(MartManifest(lines.head, None, Map(0 -> lines.head)))
+      MartManifest(applied.stripPrefix("applied="), scheme, buckets)
+    }
   }
 
   /** Publish the next manifest version: touched buckets move to the
@@ -1496,62 +1512,27 @@ object StreamingJobs {
                         keys: Seq[String], valueCol: String,
                         checkpoint: String, nBuckets: Int = 16,
                         expireEvery: Int = 0, expireKeep: Int = 2,
-                        retainVersions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
-    val tag = ensureRunTag(updates.sparkSession, checkpoint)
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val applied = applyOlapBatch(batch.toDF(), batchId, tag, martRoot,
-          keys, valueCol, nBuckets, retainVersions)
-        if (applied && expireEvery > 0 && batchId % expireEvery == 0)
-          expireMartSnapshots(batch.sparkSession, martRoot, expireKeep)
-        ()
-      }
-      .start()
-  }
+                        retainVersions: Int = 2): org.apache.spark.sql.streaming.StreamingQuery =
+    martStream(updates, martRoot, checkpoint, expireEvery, expireKeep) {
+      (batch, batchId, tag) => applyOlapBatch(batch, batchId, tag, martRoot,
+        keys, valueCol, nBuckets, retainVersions)
+    }
 
-  /** Apply one delta batch to the OLAP partials mart incrementally:
-    * re-aggregate the delta's partials with the current partials of
-    * ONLY the buckets the delta touches, write those buckets to a
-    * fresh snapshot, swap the manifest. Same idempotency contract as
-    * [[applyMigrateBatch]] (skip iff this exact (runTag, batchId) is
-    * the applied marker). Returns whether the batch was applied. */
+  /** Apply one delta batch to the OLAP partials mart: the delta's
+    * partials ([[olapPartials]]) re-aggregate with the current partials
+    * of ONLY the buckets it touches, committed by [[commitBatch]] with
+    * the same replay guard as [[applyMigrateBatch]]. Returns whether
+    * the batch was applied. */
   def applyOlapBatch(batch: DataFrame, batchId: Long, tag: String,
                      martRoot: String, keys: Seq[String], valueCol: String,
-                     nBuckets: Int = 16, retainVersions: Int = 2): Boolean = {
-    val sp = batch.sparkSession
-    val snap = snapshotName(tag, batchId)
-    val manifest = readManifest(sp, martRoot)
-    if (manifest.exists(_.applied == snap)) false
-    else {
-      val rebucket = manifest.exists(!_.scheme.contains(nBuckets))
-      // persisted: read twice (touched-bucket probe + merge) — without
-      // it every micro-batch pays the partial-agg shuffle twice
-      val delta = olapPartials(batch, keys, valueCol).persist()
-      try {
-        val touched =
-          if (rebucket) (0 until nBuckets).toSet
-          else delta.select(bucketExpr(keys, nBuckets).as("_b"))
-            .distinct().collect().map(_.getInt(0)).toSet
-        val bucketMap = manifest.map(_.buckets).getOrElse(Map.empty[Int, String])
-        val curPaths =
-          (if (rebucket) bucketMap.values.toSeq
-           else touched.toSeq.sorted.flatMap(bucketMap.get))
-            .distinct.map(d => s"$martRoot/$d")
-        val merged =
-          if (curPaths.isEmpty) delta
-          else sp.read.parquet(curPaths: _*).unionByName(delta)
-            .groupBy(keys.map(col): _*)
-            .agg(sum(col("sum_dec")).cast(DecimalType(30, 2)).as("sum_dec"),
-              sum(col("n_rows")).as("n_rows"))
-        merged.withColumn("_b", bucketExpr(keys, nBuckets))
-          .write.partitionBy("_b").mode("overwrite").parquet(s"$martRoot/$snap")
-        publishManifest(sp, martRoot, snap, touched,
-          if (rebucket) Map.empty else bucketMap, nBuckets, retainVersions)
-        true
-      } finally { delta.unpersist(); () }
+                     nBuckets: Int = 16, retainVersions: Int = 2): Boolean =
+    commitBatch(olapPartials(batch, keys, valueCol), batchId, tag, martRoot,
+      keys, nBuckets, retainVersions) {
+      (current, delta) => current.fold(delta)(_.unionByName(delta)
+        .groupBy(keys.map(col): _*)
+        .agg(sum(col("sum_dec")).cast(DecimalType(30, 2)).as("sum_dec"),
+          sum(col("n_rows")).as("n_rows")))
     }
-  }
 
   /** Map a document frame (doc_id, ts, text) to the 4-chunk SimHash
     * rows [[nearDupStream]] consumes; the watermark rides the chunk

@@ -33,6 +33,23 @@ class IndexSpec extends SparkSpec {
         s"extra=${probed.diff(s03).take(3)}")
   }
 
+  test("nProbe probe maps centroid positions to persisted cluster ids when a fit left a cell empty") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ivfgap").toString
+    // cells/ stores non-empty cells only: cell 1 is empty, ids are {0, 2}
+    Seq((0, Seq(1d, 0d), 0.9), (2, Seq(0d, 1d), 0.9)).toDF("cluster", "cv", "bmin")
+      .write.parquet(s"$dir/cells")
+    Seq((1L, Seq(1d, 0.1), 0), (2L, Seq(0.9, 0d), 0),
+        (3L, Seq(0.1, 1d), 2), (4L, Seq(0d, 0.9), 2))
+      .toDF("cand_id", "embedding", "cluster")
+      .write.partitionBy("cluster").parquet(s"$dir/assigned")
+    // next to centroid 2, which sits at POSITION 1 of the centroid array
+    val q = Seq((7L, Seq(0.05, 1d))).toDF("q_id", "q_vec")
+    val got = graft.operators.RangeIvfIndex.probeNearest(spark, dir, q, k = 5, nProbe = 1)
+      .select("cand_id").as[Long].collect().toSet
+    assert(got == Set(3L, 4L), s"an nProbe = 1 probe must scan cluster 2's list, got $got")
+  }
+
   test("persisted PQ index: flat probe equals s04, IVF probe equals s05, row-for-row") {
     val dir = java.nio.file.Files.createTempDirectory("pqidx").toString
     val emb = Tables.embeddings(spark, sfDir)

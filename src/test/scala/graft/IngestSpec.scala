@@ -209,25 +209,6 @@ class IngestSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), s"coalesce must not shuffle:\n$plan")
   }
 
-  test("snapshot expiry keeps the newest versions and never deletes the live pointer target") {
-    val root = Files.createTempDirectory("graft_expire").toString + "/mart"
-    val df = spark.range(10).toDF("id")
-    (0 to 4).foreach(n => df.write.mode("overwrite").parquet(s"$root/v_$n"))
-    // _LATEST deliberately points at an OLD snapshot (a reader may
-    // still hold it) — expiry must spare it even outside the window
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, "_LATEST"), true)
-    try out.write("v_1".getBytes("UTF-8")) finally out.close()
-    val deleted = Ingest.expireSnapshots(spark, root, keep = 2)
-    assert(deleted.toSet == Set("v_2", "v_0"), s"deleted $deleted")
-    val remaining = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      .map(_.getPath.getName).filter(_.startsWith("v_")).toSet
-    assert(remaining == Set("v_4", "v_3", "v_1"))
-    // the mart is still readable through the pointer
-    assert(graft.streaming.StreamingJobs.readMartLatest(spark, root).get.count() == 10)
-  }
-
   test("partitioned mart write round-trips and prunes partitions") {
     val out = Files.createTempDirectory("graft_mart").toFile.getAbsolutePath + "/mart"
     val df = Seq((1L, 2023, 10.0), (2L, 2023, 20.0), (3L, 2024, 30.0))

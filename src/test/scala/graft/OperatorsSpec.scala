@@ -276,6 +276,21 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents: a null-bearing edge list takes the distributed path, not an NPE") {
+    // small enough for the driver gate, but union-find cannot label a
+    // null id; the result must be exactly the distributed fixpoint's
+    val df = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 3L), (10L, null), (null, 11L), (11L, 12L)).toDF("a", "b")
+    val rows = Operators.connectedComponents(df, "a", "b").collect().toSet
+    val und = df.select(col("a"), col("b"))
+      .union(df.select(col("b"), col("a"))).toDF("src", "dst").cache()
+    val dist = Operators.ccDistributed(und).collect().toSet
+    und.unpersist()
+    assert(rows == dist)
+    val labels = rows.collect { case r if !r.isNullAt(0) => r.getLong(0) -> r.getLong(1) }.toMap
+    assert(labels(1L) == 1L && labels(3L) == 1L && labels(12L) == 11L)
+  }
+
   test("validateNormsImport reports every Norms.md:32-36 violation class, one row each") {
     // (assessment_id, line_no, percentile_rank, score, subject)
     val file = Seq(

@@ -930,7 +930,7 @@ class StreamingSpec extends SparkSpec {
       // prior snapshot still readable (time travel), manifest moved on
       val tag = StreamingJobs.ensureRunTag(spark, ckpt)
       assert(spark.read.parquet(s"$root/${StreamingJobs.snapshotName(tag, 0)}").count() == 2)
-      assert(StreamingJobs.readLatestName(spark, root)
+      assert(StreamingJobs.readManifest(spark, root).map(_.applied)
         .contains(StreamingJobs.snapshotName(tag, 1)))
       // first-class time travel: the previous manifest version reads
       // back the EXACT pre-batch state (key 2 alive, key 3 absent)
@@ -970,7 +970,7 @@ class StreamingSpec extends SparkSpec {
       Seq("k"), "ver", "v"))
     assert(mart() == Set((1L, "a1"), (2L, "b1")),
       "new run's first batch must merge, not be mistaken for a replay")
-    assert(StreamingJobs.readLatestName(spark, root)
+    assert(StreamingJobs.readManifest(spark, root).map(_.applied)
       .contains(StreamingJobs.snapshotName("run2", 0)))
   }
 
@@ -1033,14 +1033,14 @@ class StreamingSpec extends SparkSpec {
     // each publish lands as ONE atomic rename to a fresh _LATEST.<n>;
     // the immediately previous version is retained as the fallback
     assert(manifests == Seq("_LATEST.1", "_LATEST.2"), manifests.toString)
-    assert(StreamingJobs.readLatestName(spark, root)
+    assert(StreamingJobs.readManifest(spark, root).map(_.applied)
       .contains(StreamingJobs.snapshotName("t", 1L)))
     // crash simulation: at no point during a publish does the root lack
     // a resolvable manifest — if the newest were lost mid-publish, the
     // previous version still resolves to the pre-batch state (so a
     // replay merges against the REAL prior mart, not an empty one)
     fs.delete(new org.apache.hadoop.fs.Path(root, "_LATEST.2"), false)
-    assert(StreamingJobs.readLatestName(spark, root)
+    assert(StreamingJobs.readManifest(spark, root).map(_.applied)
       .contains(StreamingJobs.snapshotName("t", 0L)),
       "previous manifest version must remain resolvable")
     val mart = StreamingJobs.readMartLatest(spark, root).get
@@ -1054,35 +1054,37 @@ class StreamingSpec extends SparkSpec {
       .select("k", "v").as[(Long, String)].collect().toSet == Set((1L, "a2")))
   }
 
-  test("bucket-scheme change or legacy mart re-buckets once instead of leaving stale rows reachable") {
+  test("bucket-scheme change re-buckets once instead of leaving stale rows reachable (latest-state and OLAP marts)") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_rebucket").toString + "/mart"
-    def mart() = StreamingJobs.readMartLatest(spark, root).get
-      .select("k", "v").as[(Long, String)].collect().toSeq.sorted
-    // legacy single-pointer mart: survivors parquet + bare-name _LATEST
-    Seq((1L, 1L, "a1"), (2L, 1L, "b1")).toDF("k", "ver", "v")
-      .write.parquet(s"$root/v_legacy")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, "_LATEST"), true)
-    try out.write("v_legacy".getBytes("UTF-8")) finally out.close()
-    assert(mart() == Seq((1L, "a1"), (2L, "b1")))
-    // first incremental batch against the legacy layout: key 1 updates.
-    // Without re-bucketing, v_legacy's k=1 row would stay reachable
-    // beside the new one — a latest-state mart with duplicate keys.
-    assert(StreamingJobs.applyMigrateBatch(
-      Seq((1L, 2L, "a2", false)).toDF("k", "ver", "v", "deleted"),
-      0L, "runA", root, Seq("k"), "ver", "v", nBuckets = 4))
-    assert(mart() == Seq((1L, "a2"), (2L, "b1")),
-      "legacy rows must be re-bucketed, not duplicated")
-    assert(StreamingJobs.readManifest(spark, root).get.scheme.contains(4))
-    // scheme change (4 → 2 buckets): same contract
-    assert(StreamingJobs.applyMigrateBatch(
-      Seq((2L, 2L, "b2", false)).toDF("k", "ver", "v", "deleted"),
-      1L, "runA", root, Seq("k"), "ver", "v", nBuckets = 2))
-    assert(mart() == Seq((1L, "a2"), (2L, "b2")),
-      "an nBuckets change must re-bucket, not strand old-scheme rows")
-    assert(StreamingJobs.readManifest(spark, root).get.scheme.contains(2))
+    // (mart kind, apply a (k, x) batch under nBuckets, the mart as
+    // (k, value), the value of key k after both batches below)
+    val marts = Seq[(String, (org.apache.spark.sql.DataFrame, Long, String, Int) => Boolean,
+                     org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame, Long => Double)](
+      ("latest-state",
+        (b, id, root, n) => StreamingJobs.applyMigrateBatch(
+          b.withColumn("ver", lit(id)).withColumn("deleted", lit(false)),
+          id, "runA", root, Seq("k"), "ver", "x", nBuckets = n),
+        _.select("k", "x"), _ => 100.0),
+      ("OLAP-partials",
+        (b, id, root, n) => StreamingJobs.applyOlapBatch(
+          b, id, "runA", root, Seq("k"), "x", nBuckets = n),
+        StreamingJobs.olapDerive(_, Seq("k")).select("k", "sum_value"), k => k + 100.0))
+    val keys = 1L to 20L
+    for ((kind, apply, view, expected) <- marts) {
+      val root = java.nio.file.Files.createTempDirectory("graft_rebucket").toString + "/mart"
+      def mart() = view(StreamingJobs.readMartLatest(spark, root).get)
+        .as[(Long, Double)].collect().toSeq.sorted
+      assert(apply(keys.map(k => (k, k.toDouble)).toDF("k", "x"), 0L, root, 4))
+      assert(StreamingJobs.readManifest(spark, root).get.scheme == 4)
+      // scheme change (4 → 2 buckets) with every key updated: without
+      // re-bucketing, the rows in old buckets 2 and 3 would stay
+      // reachable beside their replacements (latest-state) or unmerged
+      // with them (OLAP)
+      assert(apply(keys.map(k => (k, 100.0)).toDF("k", "x"), 1L, root, 2))
+      assert(mart() == keys.map(k => (k, expected(k))),
+        s"$kind: an nBuckets change must re-bucket, not strand old-scheme rows")
+      assert(StreamingJobs.readManifest(spark, root).get.scheme == 2)
+    }
   }
 
   test("migrateStream expiry hook keeps snapshot count bounded with readers unbroken") {
@@ -1234,7 +1236,7 @@ class StreamingSpec extends SparkSpec {
       .as[(Timestamp, String, Double, Long, Double)].collect().toSeq
     assert(derived == full,
       s"mart after 2 delta merges must equal the full recompute:\n$derived\n$full")
-    assert(StreamingJobs.readLatestName(spark, root)
+    assert(StreamingJobs.readManifest(spark, root).map(_.applied)
       .contains(StreamingJobs.snapshotName(StreamingJobs.ensureRunTag(spark, ckpt), 1)))
     // crash replay within the SAME run (same checkpoint → same runTag):
     // the applied marker matches, so re-merging the partials — which
